@@ -3,8 +3,6 @@ package perfbench
 import java.nio.file.{Files, Paths}
 import java.util.{ArrayList => JList, LinkedHashMap => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -18,11 +16,11 @@ import graft.{Caches, GrowFixture, SparkEntry}
   *  - `grow --base DIR --out DIR --factor F --cores N`: write a
   *    `GrowFixture` cut of the base tables;
   *  - `run --input DIR --out DIR --queries a,b --cores N --seconds S
-  *    --trace 0|1 --spawn-ms T --setups K`: set the session up K times,
-  *    run every query once writing its output for the oracle check, then
-  *    time whole sweeps over the queries, one query at a time, for about
-  *    S seconds, and write `DIR/result.json` (and `DIR/trace.json` when
-  *    traced).
+  *    --trace 0|1 --spawn-ms T`: set the session up, timed from the
+  *    process's spawn, run every query once writing its output for the
+  *    oracle check, then time whole sweeps over the queries, one query at
+  *    a time, for about S seconds, and write `DIR/result.json` (and
+  *    `DIR/trace.json` when traced).
   *
   * Every mode rejects a query name the program does not register.
   */
@@ -37,12 +35,6 @@ object Harness {
     val m = new JMap[String, Any]()
     kv.foreach { case (k, v) => m.put(k, v) }
     m
-  }
-
-  private def list(xs: Iterable[Any]): JList[Any] = {
-    val l = new JList[Any]()
-    xs.foreach(l.add)
-    l
   }
 
   def main(argv: Array[String]): Unit = {
@@ -67,10 +59,10 @@ object Harness {
         finally spark.stop()
       case "run" =>
         val spawnMs = args("spawn-ms").toLong
-        // the first set-up counts from process start: JVM start plus class loading
+        // set-up counts from process start: JVM start plus class loading
         val startNs = mainNs - (mainMs - spawnMs) * 1000000L
         run(queries, args("input"), args("out"), args("cores").toInt,
-          args("seconds").toDouble, args("trace") == "1", args("setups").toInt, startNs)
+          args("seconds").toDouble, args("trace") == "1", startNs)
       case other =>
         sys.error(s"unknown mode $other")
     }
@@ -100,34 +92,19 @@ object Harness {
 
   private def secs(ns: Long): Double = ns / 1e9
 
-  /** Peak resident set of this process in bytes (Linux `VmHWM`). */
-  private def peakRssBytes(): Long =
-    Files.readAllLines(Paths.get("/proc/self/status")).asScala
-      .collectFirst { case l if l.startsWith("VmHWM:") =>
-        l.stripPrefix("VmHWM:").trim.stripSuffix("kB").trim.toLong * 1024L
-      }.getOrElse(-1L)
-
   private def run(queries: Seq[String], input: String, out: String, cores: Int,
-                  seconds: Double, trace: Boolean, setups: Int, startNs: Long): Unit = {
+                  seconds: Double, trace: Boolean, startNs: Long): Unit = {
     Files.createDirectories(Paths.get(out))
 
-    // Set-up: build the session and run one job on every core. Repeated so
-    // the result is a median; the first sample counts from process start.
-    var spark: SparkSession = null
-    val setupRows = (1 to setups).map { i =>
-      if (spark != null) {
-        Caches.releaseAll()
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val t0 = if (i == 1) startNs else System.nanoTime()
-      spark = session(cores, s"$out/spark")
-      val t1 = System.nanoTime()
-      spark.range(0, 1000, 1, cores).count()
-      val t2 = System.nanoTime()
-      obj("session_s" -> secs(t1 - t0), "warmup_s" -> secs(t2 - t1), "setup_s" -> secs(t2 - t0))
-    }
+    // Set-up, from process start: JVM start, class loading, the session,
+    // and one job on every core.
+    val spark = session(cores, s"$out/spark")
+    val t1 = System.nanoTime()
+    spark.range(0, 1000, 1, cores).count()
+    val t2 = System.nanoTime()
+    val setup = obj("session_s" -> secs(t1 - startNs), "warmup_s" -> secs(t2 - t1),
+      "setup_s" -> secs(t2 - startNs))
+    val memory = new MemoryProbe()
 
     // Output pass, outside the timed window: each query's result is
     // written once for the oracle check. It also compiles every plan's
@@ -145,16 +122,19 @@ object Harness {
 
     val tracer = if (trace) Some(new Tracer(spark)) else None
     tracer.foreach(_.install())
-    System.gc()
 
     // Timed window: whole sweeps, one query at a time (a closed loop),
     // while the next sweep is expected to end inside `seconds`; at least one.
+    // Each sweep starts from a full collection, so the heap every sweep
+    // meets, and the heap left in use after its collections, are the same
+    // from run to run.
     val execs = new JList[Any]()
     val windowStart = System.nanoTime()
     var sweeps = 0
     var lastSweep = 0L
     var exec = 0
     while (sweeps == 0 || secs(System.nanoTime() - windowStart + lastSweep) <= seconds) {
+      System.gc()
       val s0 = System.nanoTime()
       queries.foreach { q =>
         if (trace) {
@@ -179,7 +159,7 @@ object Harness {
           "end_ms" -> (startMs + (t2 - t0) / 1000000L),
           "build_s" -> secs(t1 - t0), "wall_s" -> secs(t2 - t0), "error" -> error))
         Caches.releaseAll()
-        exec += 1
+          exec += 1
       }
       lastSweep = System.nanoTime() - s0
       sweeps += 1
@@ -196,13 +176,16 @@ object Harness {
       "default_parallelism" -> spark.sparkContext.defaultParallelism,
       "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
       "spark_version" -> spark.version,
-      "setups" -> list(setupRows),
+      "setup" -> setup,
       "check_errors" -> checkErrors,
       "output_pass_s" -> outputS,
       "sweeps" -> sweeps,
       "window_s" -> windowS,
       "execs" -> execs,
-      "peak_rss_bytes" -> peakRssBytes()))
+      "heap_live_peak_bytes" -> memory.heapLivePeak,
+      "off_heap_peak_bytes" -> memory.offHeapPeak,
+      "vm_hwm_bytes" -> MemoryProbe.vmHwm()))
+    memory.close()
     Caches.releaseAll()
     spark.stop()
   }

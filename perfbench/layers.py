@@ -47,6 +47,7 @@ PER_LAYER = [
     _m("exec.task_run_s", "s", "lower"), _m("exec.task_cpu_s", "s", "lower"),
     _m("exec.gc_s", "s", "lower"), _m("exec.core_util", "ratio", "higher"),
     _m("exec.peak_mem_mb", "MB", "lower"),
+    _m("mem.heap_live_peak_mb", "MB", "lower"), _m("mem.off_heap_peak_mb", "MB", "lower"),
     _m("shuffle.write_mb", "MB", "lower"), _m("shuffle.read_mb", "MB", "lower"),
     _m("shuffle.fetch_wait_s", "s", "lower"), _m("shuffle.spill_mb", "MB", "lower"),
     _m("shuffle.skew", "ratio", "lower"),
@@ -237,8 +238,10 @@ def per_layer(result, trace, cores):
     for k in m:
         if k not in peaks:
             m[k] /= sweeps
-    m["setup.session_s"] = statistics.median(s["session_s"] for s in result["setups"])
-    m["setup.warmup_s"] = statistics.median(s["warmup_s"] for s in result["setups"])
+    m["setup.session_s"] = result["setup"]["session_s"]
+    m["setup.warmup_s"] = result["setup"]["warmup_s"]
+    m["mem.heap_live_peak_mb"] = result["heap_live_peak_bytes"] / MB
+    m["mem.off_heap_peak_mb"] = result["off_heap_peak_bytes"] / MB
     for q in per_query.values():
         n = q["calls"]
         q["wall_s"] = sum(q["wall_s"])

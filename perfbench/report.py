@@ -84,15 +84,18 @@ def traced(all_runs):
             a, b = plain[:len(plain) // 2], plain[len(plain) // 2:]
             rows = []
             for m in END_TO_END:
-                ma = statistics.median(r["metrics"][m["name"]] for r in a)
-                mb = statistics.median(r["metrics"][m["name"]] for r in b)
-                rows.append([m["name"], f(ma), f(mb), f"{100 * (mb / ma - 1):+.1f}%",
-                             "yes" if mb / ma - 1 <= m["bound"] else "no"])
+                sa = spread([r["metrics"][m["name"]] for r in a])
+                sb = spread([r["metrics"][m["name"]] for r in b])
+                ma, mb = sa[0], sb[0]
+                rows.append([m["name"], f(ma), f(sa[3]), f(mb), f(sb[3]),
+                             f"{100 * (mb / ma - 1):+.1f}%",
+                             "yes" if abs(mb / ma - 1) <= m["bound"] else "no"])
             out += [f"Two sets of the same code: seeds {a[0]['context']['seed']}.."
                     f"{a[-1]['context']['seed']} then {b[0]['context']['seed']}.."
                     f"{b[-1]['context']['seed']}.", "",
-                    table(["metric", "median, first set", "median, second set", "change",
-                           "within bound"], rows), ""]
+                    table(["metric", "median, first set", "spread, first set",
+                           "median, second set", "spread, second set", "change",
+                           "change within bound"], rows), ""]
 
         per_q = {}
         for r in plain:
@@ -128,7 +131,8 @@ def traced(all_runs):
         keys = ["setup.session_s", "setup.warmup_s", "queries.build_s", "queries.build_jobs",
                 "plan.optimizer_s", "sched.jobs", "sched.tasks", "sched.driver_gap_s",
                 "exec.task_run_s", "exec.core_util", "scan.read_mb", "shuffle.read_mb",
-                "stream.batches", "batch_p50_ms", "state.commit_s", "state.rows_peak"]
+                "stream.batches", "batch_p50_ms", "state.commit_s", "state.rows_peak",
+                "mem.heap_live_peak_mb", "mem.off_heap_peak_mb"]
         out += [table(["per-layer metric", "value"], [[k, f(tm[k])] for k in keys]), ""]
         rows = []
         for q, v in ctx["per_query"].items():
@@ -146,8 +150,8 @@ def traced(all_runs):
            and r["context"]["trace"] == 1]
     if llm:
         pq = llm[0]["context"]["per_query"]
-        rows = [[q, f(pq[q]["jobs"], 0), n, f(pq[q]["jobs"] / n, 1)]
-                for q, n in GRAPH_ITERS.items() if q in pq]
+        rows = [[q, f(pq[q]["jobs"], 0), n, f(pq[q]["jobs"] / n, 1)] if q in pq
+                else [q, "not in the workload", n, "—"] for q, n in GRAPH_ITERS.items()]
         out += ["Jobs per call of the graph queries (item 5; the jobs/iteration column "
                 "divides all of a call's jobs, set-up jobs included, by its iterations):", "",
                 table(["query", "jobs per call", "iterations", "jobs / iteration"], rows), ""]
@@ -167,7 +171,7 @@ def traced(all_runs):
             "benchmark's run-to-run spread of the same query (IQR/median over the "
             "untraced runs). A move no larger than about one spread cannot be told "
             "from noise with one pair; it needs ten or more "
-            "alternating before/after pairs. The two dedup queries are not in any workload.", "",
+            "alternating before/after pairs. `q_dedup_pipeline` is in no workload.", "",
             table(["query", "VERDICT move", "spread here", "move ÷ spread"], rows), ""]
     gates = {}
     for r in all_runs:
@@ -185,8 +189,8 @@ def scaling(all_runs):
     out = ["# Core-scaling record", "",
            "Untraced runs of one seed at `local[1]`, `local[2]` and `local[N]` "
            "(N = all cores) on a 4-core x86-64 Linux VM, shuffle partitions = cores. Not "
-           "gated. One run per row; the run-to-run spread on the same VM is 9–14% (see "
-           "traced.md), so smaller differences are not resolved.", ""]
+           "gated. One run per row, so differences inside the run-to-run spread of `wall_s` "
+           "(traced.md) are not resolved.", ""]
     rows = []
     for w in WORKLOADS:
         rs = [r for r in all_runs if r["context"]["workload"] == w and r["context"]["trace"] == 0]

@@ -29,10 +29,12 @@ WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 HARNESS = os.path.join(HERE, "harness")
 TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 880
-# A fixed, pre-touched heap keeps peak RSS from following GC timing; C1
-# only, because C2 keeps recompiling for minutes, longer than any run.
+# A fixed, pre-touched heap: GC sizing then behaves the same in every run,
+# and the resident set outside the heap is exactly VmHWM minus the heap.
+# C1 only: under C2 the JIT keeps recompiling for minutes, longer than any
+# run, so call times fall sweep after sweep, and its compiler's native
+# memory swings the resident set by hundreds of MB. Figures are C1 figures.
 JVM_FLAGS = ["-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch", "-XX:TieredStopAtLevel=1"]
-SETUPS = 3
 
 sys.path.insert(0, HERE)
 import inputs  # noqa: E402
@@ -124,32 +126,36 @@ def harness(launch, args, tmp, deadline):
 
 def prepare(launch, spec, cores, deadline):
     """A workload's unpermuted base tables and its oracle answers, made
-    once per build: the base is the committed fixture or a GrowFixture cut
-    of it. The answers depend only on table contents, which no seed
-    changes, so they are computed once from the base."""
+    once per build (and again when the workload's query list grows): the
+    base is the committed fixture or a GrowFixture cut of it. The answers
+    depend only on table contents, which no seed changes, so they are
+    computed once from the base."""
     base = inputs.FIXTURE
     work = os.path.join(WORK, "prepared", spec["name"])
     if spec["grow"]:
         base = os.path.join(work, f"grown-x{spec['grow']}")
     answers_path = os.path.join(work, "answers.pkl")
-    if not os.path.exists(answers_path):
-        shutil.rmtree(work, ignore_errors=True)
-        tmp = os.path.join(work, "tmp")
-        if spec["grow"]:
-            harness(launch, ["grow", "--base", inputs.FIXTURE, "--out", base,
-                             "--factor", str(spec["grow"]), "--cores", str(cores)],
-                    tmp, deadline)
-        harness(launch, ["oracles", "--queries", ",".join(spec["queries"]), "--out", work],
+    if os.path.exists(answers_path):
+        with open(answers_path, "rb") as f:
+            answers = pickle.load(f)
+        if set(spec["queries"]) <= set(answers):
+            return base, answers
+    shutil.rmtree(work, ignore_errors=True)
+    tmp = os.path.join(work, "tmp")
+    if spec["grow"]:
+        harness(launch, ["grow", "--base", inputs.FIXTURE, "--out", base,
+                         "--factor", str(spec["grow"]), "--cores", str(cores)],
                 tmp, deadline)
-        shutil.rmtree(tmp)
-        import check  # imports duckdb, which only runs off the timed path
-        with open(os.path.join(work, "oracle_sql.json")) as f:
-            answers = check.oracle_answers(base, json.load(f))
-        with open(answers_path + ".tmp", "wb") as f:
-            pickle.dump(answers, f)
-        os.rename(answers_path + ".tmp", answers_path)
-    with open(answers_path, "rb") as f:
-        return base, pickle.load(f)
+    harness(launch, ["oracles", "--queries", ",".join(spec["queries"]), "--out", work],
+            tmp, deadline)
+    shutil.rmtree(tmp)
+    import check  # imports duckdb, which only runs off the timed path
+    with open(os.path.join(work, "oracle_sql.json")) as f:
+        answers = check.oracle_answers(base, json.load(f))
+    with open(answers_path + ".tmp", "wb") as f:
+        pickle.dump(answers, f)
+    os.rename(answers_path + ".tmp", answers_path)
+    return base, answers
 
 
 def seeded_inputs(spec, base, seed):
@@ -191,11 +197,11 @@ def end_to_end(result):
     if not walls:
         fail("every timed call failed: " + result["execs"][0]["error"])
     return {
-        "setup_s": statistics.median(s["setup_s"] for s in result["setups"]),
+        "setup_s": result["setup"]["setup_s"],
         "wall_s": sum(per_query_median(result["execs"]).values()),
         "query_p50_s": layers.percentile(walls, 50),
         "query_p90_s": layers.percentile(walls, 90),
-        "peak_rss_mb": result["peak_rss_bytes"] / 2**20,
+        "peak_rss_mb": (result["heap_live_peak_bytes"] + result["off_heap_peak_bytes"]) / 2**20,
     }
 
 
@@ -223,7 +229,7 @@ def main():
     shutil.rmtree(run, ignore_errors=True)
     harness(launch, ["run", "--input", inp, "--out", run, "--queries", ",".join(queries),
                      "--cores", str(a.cores), "--seconds", str(a.seconds),
-                     "--trace", str(a.trace), "--setups", str(SETUPS),
+                     "--trace", str(a.trace),
                      "--spawn-ms", str(time.time_ns() // 1_000_000)],
             os.path.join(run, "tmp"), deadline)
     with open(os.path.join(run, "result.json")) as f:
@@ -251,7 +257,7 @@ def main():
         "inputs": inputs.describe(inp), "sweeps": result["sweeps"],
         "window_s": result["window_s"], "output_pass_s": result["output_pass_s"],
         "samples": len(result["execs"]),
-        "setups": result["setups"],
+        "setup": result["setup"], "vm_hwm_mb": result["vm_hwm_bytes"] / 2**20,
         "query_median_s": per_query_median(result["execs"]),
         "query_build_median_s": per_query_median(result["execs"], "build_s"),
         "per_query": per_query, "failures": failures,

@@ -59,6 +59,17 @@ class MetricNames(unittest.TestCase):
         self.assertEqual(spec["per_layer"], layers.PER_LAYER)
 
 
+class Fixture(unittest.TestCase):
+    @unittest.skipUnless(os.environ.get("PERFBENCH_CORPUS"),
+                         "set PERFBENCH_CORPUS to the sf0.01 test corpus to compare")
+    def test_fixture_is_a_byte_copy_of_the_corpus(self):
+        corpus = os.environ["PERFBENCH_CORPUS"]
+        for t in inputs.TABLES:
+            with open(os.path.join(inputs.FIXTURE, f"{t}.parquet"), "rb") as a, \
+                    open(os.path.join(corpus, f"{t}.parquet"), "rb") as b:
+                self.assertEqual(a.read(), b.read(), t)
+
+
 class SeededInputs(unittest.TestCase):
     def setUp(self):
         self.tmp = scratch()

@@ -16,10 +16,11 @@ WORKLOADS = {w["name"]: w for w in [
     },
     {
         "name": "llm_pipeline",
-        # iterative graph queries: large plans, many jobs, per-round
-        # checkpoints
+        # iterative graph queries (large plans, many jobs, per-round
+        # checkpoints) and MinHash near-duplicate detection (graft.llm
+        # kernels)
         "grow": None,
-        "queries": ["q_hits", "q_label_prop", "q_pagerank"],
+        "queries": ["q_hits", "q_pagerank", "q_dedup_minhash"],
     },
     {
         "name": "stream_replay",
@@ -39,6 +40,6 @@ END_TO_END = [
     _m("wall_s", "s", "lower", 0.25),
     _m("query_p50_s", "s", "lower", 0.25),
     _m("query_p90_s", "s", "lower", 0.25),
-    _m("peak_rss_mb", "MB", "lower", 0.05),
+    _m("peak_rss_mb", "MB", "lower", 0.10),
     _m("setup_s", "s", "lower", 0.25),
 ]
